@@ -48,6 +48,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 DEFAULT_CATALOG = "fc_iceberg"
 DEFAULT_NAMESPACE = "crawl"
@@ -110,6 +111,10 @@ class ParquetSnapshotBackend:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        # (table, round) -> schema of the rows written there. A read with
+        # the schema in hand launches no Spark job; without it Spark runs
+        # a footer-reading job to infer one on every read.
+        self._schemas: dict[tuple[str, int], StructType] = {}
 
     def _p(self, table: str, round_no: int) -> str:
         return os.path.join(self.root, table, f"round={round_no:05d}")
@@ -127,22 +132,34 @@ class ParquetSnapshotBackend:
             # scans are sequential and metadata-prunable
             w = w.sortWithinPartitions(*sort_cols)
         w.write.mode("overwrite").parquet(self._p(table, round_no))
+        self._schemas[(table, round_no)] = df.schema
+
+    def _read(self, table: str, rounds: list[int]) -> DataFrame:
+        """Read ``rounds`` of ``table`` with the schema of the FIRST of
+        them — the schema Spark's own inference picks (it reads one footer
+        from the first path), so a state whose older rounds lack a later
+        column (e.g. ``claim_round``) reads as it always has. A round this
+        process did not write (a resumed state) is inferred once, then
+        remembered."""
+        paths = [self._p(table, r) for r in rounds]
+        schema = self._schemas.get((table, rounds[0]))
+        if schema is None:
+            df = self.spark.read.parquet(*paths)
+            self._schemas[(table, rounds[0])] = df.schema
+            return df
+        return self.spark.read.schema(schema).parquet(*paths)
 
     def read(self, table: str, round_no: int) -> DataFrame:
-        return self.spark.read.parquet(self._p(table, round_no))
+        return self._read(table, [round_no])
 
     def exists(self, table: str, round_no: int) -> bool:
         return os.path.exists(os.path.join(self._p(table, round_no), "_SUCCESS"))
 
     def read_all(self, table: str, upto_round: int) -> DataFrame | None:
-        paths = [
-            self._p(table, r)
-            for r in range(upto_round + 1)
-            if self.exists(table, r)
-        ]
-        if not paths:
+        rounds = [r for r in range(upto_round + 1) if self.exists(table, r)]
+        if not rounds:
             return None
-        return self.spark.read.parquet(*paths)
+        return self._read(table, rounds)
 
 
 class IcebergBackend:

@@ -1,9 +1,36 @@
 """Multi-round frontier crawl driver — M2/M3 (SURVEY.md §7).
 
 BFS-style iterated batch rounds (the reference's stage-barrier execution,
-orchestrator.py:525-626, generalized to a real frontier): one Spark job
-per round, checkpoint commit per round (CrawlState), exact-resume from
-the manifest.
+orchestrator.py:525-626, generalized to a real frontier): a fixed set of
+Spark actions per round, checkpoint commit per round (CrawlState),
+exact-resume from the manifest.
+
+The actions a round runs, each producing data the round needs (every
+count in the metrics row is observed on one of them — no count job):
+
+  read      TTL only: the due set (localCheckpoint; its size observed),
+            then the ``retired`` write when it is not empty
+  schedule  politeness + robots window pass (localCheckpoint; status
+            counts observed)
+  probe     fused probe+claim cogroup (localCheckpoint; filter-positive
+            count observed; under TTL its segment input is the retire
+            cogroup's output); the exact confirm of the positives only
+            when there are any (localCheckpoint)
+  claim     ``seen`` + ``bloom`` writes, overlapped (n_new observed on
+            the seen write, segment fill on the bloom write)
+  fetch     ``results`` write (fetch join + extract + classify);
+            ``digests`` write with adaptive recrawl
+  expand    link explode/canonicalize/gate (localCheckpoint; redirect
+            counts observed), the trap cut with trap_gate
+            (localCheckpoint), the candidates' filter probe
+            (localCheckpoint; positives counted) and the fresh
+            candidates (localCheckpoint; n_enqueued observed)
+  commit    ``lineage``, ``metrics``, ``host_metrics`` and the next
+            frontier, overlapped; then the manifest rename (no job)
+
+State reads launch no job (the checkpoint backend reads with the schema
+it wrote). Under adaptive query execution every query stage of an
+action is its own Spark job, so a round runs a few dozen jobs.
 
 Round K dataflow (all DataFrame ops; barriers land on shuffles):
 
@@ -23,8 +50,9 @@ inside the fetch join's projection.
 from __future__ import annotations
 
 import time
+from dataclasses import replace
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from fraudcrawler_spark.config import (
@@ -54,21 +82,43 @@ def _nc(rows: int) -> int | None:
     return None if rows > 2_000_000 else max(1, rows // 100_000 + 1)
 
 
+def _nc_segments(partitions: int) -> int:
+    """Files for a segment snapshot: one per 32 segments (8 MB of cuckoo
+    table at the default capacity), at least one."""
+    return max(1, partitions // 32)
+
+
 def _par(*thunks) -> None:
     """Run independent Spark actions from driver threads so their jobs
     overlap (optimization guide §2.6): the scheduler back-fills executor
     slots freed by one job's task tail with the next job's tasks. Used
     for the per-round state writes that have no data dependency on each
     other — each write is its own job either way, so failure semantics
-    are unchanged (any exception still aborts the round pre-commit)."""
+    are unchanged (any exception still aborts the round pre-commit).
+
+    The threads inherit the caller's Spark local properties (job group,
+    job description), so the overlapped jobs stay attributable to the
+    group that submitted them."""
     if len(thunks) == 1:
         thunks[0]()
         return
-    from concurrent.futures import ThreadPoolExecutor
+    from pyspark import InheritableThread
 
-    with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
-        for f in [ex.submit(t) for t in thunks]:
-            f.result()
+    errors: list[BaseException] = []
+
+    def run(thunk) -> None:
+        try:
+            thunk()
+        except BaseException as e:  # re-raised on the calling thread
+            errors.append(e)
+
+    threads = [InheritableThread(target=run, args=(t,)) for t in thunks]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    if errors:
+        raise errors[0]
 
 
 def _lineage(df: DataFrame, stage: str, src_col: str | None = None) -> DataFrame:
@@ -240,7 +290,8 @@ def _load_seen(spark: SparkSession, state: CrawlState, upto: int,
 
 
 def _adaptive_recrawl_due(
-    state: CrawlState, round_no: int, config: CrawlConfig
+    state: CrawlState, round_no: int, config: CrawlConfig,
+    claim_last: DataFrame | None,
 ) -> DataFrame | None:
     """Change-adaptive recrawl due set (config.adaptive_recrawl): a url
     is due when rounds-since-last-claim ≥ its PERSONAL period — the base
@@ -257,21 +308,19 @@ def _adaptive_recrawl_due(
     interval overestimates the per-k rate, snapping the url back to
     the base period faster than an exact estimator would.
 
-    Plan: one max-aggregation over the seen deltas (url-partitioned),
-    one lag window over the digest history — url-keyed, K-row
-    partitions, no skew — and a left join of the two MB-scale
-    summaries. Returns None before any claim carries claim_round (fresh
-    semantics fall back to the fixed-TTL path).
+    Plan: the round's shared max-aggregation over the seen deltas
+    (``claim_last``: url, _rc — url-partitioned), one lag window over the
+    digest history — url-keyed, K-row partitions, no skew — and a left
+    join of the two MB-scale summaries. Returns None before any claim
+    carries claim_round (``claim_last`` None: fresh semantics fall back
+    to the fixed-TTL path).
     """
     from pyspark.sql import Window
 
-    k = config.recrawl_after_rounds
-    seen_all = state.read_all("seen", round_no - 1)
-    if seen_all is None or "claim_round" not in seen_all.columns:
+    if claim_last is None:
         return None
-    last = seen_all.groupBy("url").agg(
-        F.max("claim_round").alias("last_claim")
-    )
+    k = config.recrawl_after_rounds
+    last = claim_last.withColumnRenamed("_rc", "last_claim")
     est = None
     hist = state.read_all("digests", round_no - 1)
     if hist is not None:
@@ -344,18 +393,27 @@ def run_round(
     # fingerprint-collision url from recrawl (r3 review finding).
     if config.recrawl_after_rounds is not None:
         er = round_no - config.recrawl_after_rounds
+        # the ONE view of the claim history this phase builds: each url's
+        # last claim round, shared by the due set and the idempotence
+        # filter below (None for a state whose seen rows predate
+        # claim_round)
+        seen_hist = state.read_all("seen", round_no - 1)
+        claim_last = None
+        if seen_hist is not None and "claim_round" in seen_hist.columns:
+            claim_last = seen_hist.groupBy("url").agg(
+                F.max("claim_round").alias("_rc")
+            )
         cand = None
         if config.adaptive_recrawl:
-            cand = _adaptive_recrawl_due(state, round_no, config)
+            cand = _adaptive_recrawl_due(state, round_no, config, claim_last)
         if cand is None and er >= 0 and state.exists("seen", er):
-            cand = state.read("seen", er).select("url").distinct()
-            later = state.read_all("seen", round_no - 1)
-            if later is not None and "claim_round" in later.columns:
-                # urls re-claimed SINCE round er are not due yet
-                cand = cand.join(
-                    later.where(F.col("claim_round") > er).select("url"),
-                    "url", "left_anti",
-                )
+            if claim_last is not None:
+                # due: urls whose LAST claim was round er (every seen row
+                # carries the round that wrote it, so urls re-claimed
+                # since er are not due yet)
+                cand = claim_last.where(F.col("_rc") == er).select("url")
+            else:
+                cand = state.read("seen", er).select("url").distinct()
         if cand is not None:
             # idempotence (r6 advice): a url retired in an EARLIER round
             # that has not been re-claimed since (e.g. its re-enqueue is
@@ -367,14 +425,10 @@ def run_round(
             # by a claim.
             ret_all = state.read_all("retired", round_no - 1)
             if ret_all is not None:
-                seen_all = state.read_all("seen", round_no - 1)
                 ret_last = ret_all.groupBy("url").agg(
                     F.max("retire_round").alias("_rr")
                 )
-                if seen_all is not None and "claim_round" in seen_all.columns:
-                    claim_last = seen_all.groupBy("url").agg(
-                        F.max("claim_round").alias("_rc")
-                    )
+                if claim_last is not None:
                     # strict >: the TTL flow retires and re-claims in the
                     # SAME round (retire_round == claim_round, claim
                     # last), so equal rounds mean the re-claim happened
@@ -390,8 +444,11 @@ def run_round(
                 else:
                     pending = ret_last.select("url")
                 cand = cand.join(pending, "url", "left_anti")
-            expired = cand.localCheckpoint()
-            if expired.count() > 0:
+            expired_obs = Observation()
+            expired = cand.observe(
+                expired_obs, F.count(F.lit(1)).alias("n")
+            ).localCheckpoint()
+            if expired_obs.get["n"] > 0:
                 store.retire(expired)
                 state.write(
                     "retired", round_no,
@@ -413,16 +470,22 @@ def run_round(
     # --- politeness + robots ------------------------------------------------
     # ONE window pass, materialized once (localCheckpoint truncates lineage
     # so downstream actions don't replay the round DAG), then sliced.
-    # n_frontier comes from the status counts — no separate frontier-scan
-    # job (every frontier row gets exactly one sched_status).
+    # The status counts are observed on that materialization — no count
+    # job; n_frontier is their sum (every frontier row gets exactly one
+    # sched_status).
+    sched_obs = Observation()
     sched_st = schedule_status(
         frontier, tables.get("robots"), config.host_budget, config.salt_shards
+    ).observe(
+        sched_obs,
+        *[F.count(F.when(F.col("sched_status") == s, 1)).alias(s)
+          for s in ("scheduled", "deferred", "blocked")],
     ).localCheckpoint()
-    sched_counts = {
-        r["sched_status"]: r["count"]
-        for r in sched_st.groupBy("sched_status").count().collect()
-    }
-    n_frontier = sum(sched_counts.values())
+    sched_counts = sched_obs.get
+    n_scheduled = sched_counts["scheduled"]
+    n_deferred = sched_counts["deferred"]
+    n_blocked = sched_counts["blocked"]
+    n_frontier = n_scheduled + n_deferred + n_blocked
     if n_frontier == 0:
         return False
     scheduled = sched_st.where(F.col("sched_status") == "scheduled").drop("sched_status")
@@ -431,17 +494,18 @@ def run_round(
     _mark("t_schedule", tick)
 
     # --- fused seen probe + claim (Bloom + exact confirm, one cogroup) -------
-    claim_input = scheduled.select("url").withColumn(
-        "is_blocked", F.lit(False)
-    ).unionByName(blocked.select("url").withColumn("is_blocked", F.lit(True)))
-    new_all = store.probe_and_claim(claim_input)
+    # scheduled + blocked rows go through whole, so the claimed rows come
+    # back with their frontier columns (no join back to `scheduled`).
+    # Scheduled rows first: cuckoo placement follows insert order, so the
+    # persisted segment bytes depend on it
+    probed = store.probe_and_claim(
+        scheduled.withColumn("is_blocked", F.lit(False)).unionByName(
+            blocked.withColumn("is_blocked", F.lit(True)))
+    )
     # no second localCheckpoint: probe_and_claim already materialized its
-    # fused cogroup output, and this is a narrow filter over that
-    # checkpointed RDD — re-scanning it is cheaper than another
-    # materialization job per round
-    new_urls = new_all.where(~F.col("is_blocked")).select("url")
-    n_new = new_urls.count()
-    dup = scheduled.join(new_urls, "url", "left_anti")
+    # output — narrow filters over checkpointed RDDs
+    new_all = probed.where(F.col("claimed"))
+    dup = probed.where(~F.col("claimed") & ~F.col("is_blocked"))
     _mark("t_probe", tick)
 
     # persist claimed delta + segments NOW, then reload the store from
@@ -449,25 +513,36 @@ def run_round(
     # store.partitions (manifest-adopted), NOT config.seen_partitions — the
     # persisted layout wins over whatever the resuming caller passed.
     # The two writes are independent (both read the checkpointed probe
-    # output) — overlapped (§2.6).
+    # output) — overlapped (§2.6). n_new is observed on the seen write;
+    # segment health — max load factor across segments (>1.0 ⇒ FP rate
+    # past design point; exactness unaffected, resize advised) — on the
+    # segment write.
+    new_obs = Observation()
+    claimed_rows = new_all.observe(
+        new_obs, F.count(F.when(~F.col("is_blocked"), 1)).alias("n")
+    )
+    fill_obs = Observation()
+    segments = store.segments.observe(
+        fill_obs, F.max(F.col("n_items") / F.col("capacity")).alias("m")
+    )
     _par(
         lambda: state.write("seen", round_no, with_part(
-            new_all.select("url"), store.partitions
-        ).withColumn("claim_round", F.lit(round_no)), ncoalesce=8),
-        lambda: state.write("bloom", round_no, store.segments, ncoalesce=4),
+            claimed_rows.select("url"), store.partitions
+        ).withColumn("claim_round", F.lit(round_no)),
+            # claimed rows: at most the scheduled + blocked urls
+            ncoalesce=_nc(n_scheduled + n_blocked)),
+        lambda: state.write("bloom", round_no, segments,
+                            ncoalesce=_nc_segments(store.partitions)),
     )
+    n_new = new_obs.get["n"]
+    fill = fill_obs.get["m"]
     store.load(state.read("bloom", round_no),
                _effective_seen(state, round_no))
-    # segment health: max load factor across Bloom segments (>1.0 ⇒ FP
-    # rate past design point; exactness unaffected, resize advised)
-    fill = store.segments.select(
-        F.max(F.col("n_items") / F.col("capacity")).alias("m")
-    ).collect()[0]["m"]
     _mark("t_claim", tick)
 
     # --- fetch + extract + flag + classify -----------------------------------
     items = (
-        scheduled.join(new_urls.select("url"), "url", "left_semi")
+        new_all.where(~F.col("is_blocked")).select(*scheduled.columns)
         .withColumn("filtered", F.lit(False))
         .withColumn("filtered_at_stage", F.lit(None).cast("string"))
     )
@@ -476,15 +551,13 @@ def run_round(
     # driver) — the scheduled count is already in hand, so decide per round
     bcast = (
         config.fetch_broadcast_urls
-        and sched_counts.get("scheduled", 0) <= config.fetch_broadcast_max_urls
+        and n_scheduled <= config.fetch_broadcast_max_urls
     )
     fetched = fetch_extract(items, tables["pages"],
                             threshold=config.probability_threshold,
                             broadcast_urls=bcast)
-    prompts = config.prompts or (
-        prompts_from_dim(tables["prompts"]) if "prompts" in tables else ()
-    )
-    results = classify_stage(fetched, prompts).withColumn(
+    # run_crawl resolves the corpus prompts dim into config.prompts
+    results = classify_stage(fetched, config.prompts).withColumn(
         "round", F.lit(round_no)
     )
     # results parquet is both the round output and the barrier for
@@ -577,13 +650,21 @@ def run_round(
         raw_expanded = raw_expanded.withColumn("_excl", F.lit(None).cast("boolean"))
     # country flag at enqueue (reference F1, serp.py:150-158); excluded
     # domains hard-drop (reference J2, serp.py:244-246)
+    link_obs = Observation()
     raw_expanded = raw_expanded.withColumn(
         "link_status",
         F.when(F.col("_redir_loop"), F.lit("redirect_loop"))
         .when(~keep, F.lit("country"))
         .when(F.col("_excl"), F.lit("excluded"))
         .otherwise(F.lit("ok")),
-    ).drop("_excl", "_redir_loop").localCheckpoint()
+    ).drop("_excl", "_redir_loop").observe(
+        link_obs,
+        F.count(F.when(F.col("_redirected"), 1)).alias("n_redirected"),
+        F.count(F.when(F.col("link_status") == "redirect_loop", 1)).alias(
+            "n_redirect_loops"),
+    ).localCheckpoint()
+    # both zero when config.resolve_redirects is off
+    link_counts = link_obs.get
     country_flagged = raw_expanded.where(F.col("link_status") == "country")
     dropped = raw_expanded.where(F.col("link_status") == "excluded")
     loop_dropped = raw_expanded.where(F.col("link_status") == "redirect_loop")
@@ -616,11 +697,14 @@ def run_round(
             )
             .select("host", "_template", F.lit(True).alias("_trap"))
         )
+        trap_obs = Observation()
         expanded = expanded.join(
             traps, ["host", "_template"], "left"
+        ).observe(
+            trap_obs, F.count(F.when(F.col("_trap"), 1)).alias("n")
         ).localCheckpoint()
+        n_trap_dropped = trap_obs.get["n"]
         trap_dropped = expanded.where(F.col("_trap"))
-        n_trap_dropped = trap_dropped.count()
         expanded = expanded.where(F.col("_trap").isNull()).drop(
             "_template", "_trap"
         )
@@ -645,14 +729,15 @@ def run_round(
         prio = F.col("crawl_depth")
     candidates = candidates.withColumn("priority", prio).drop("_n_inlinks")
     # candidates are unique by construction (groupBy url above) — skip the
-    # probe's defensive distinct shuffle
-    fresh = candidates.join(
-        store.filter_new(candidates, assume_unique=True).select("url"),
-        "url", "left_semi",
-    )
+    # probe's defensive distinct shuffle; the probe hands back the unseen
+    # candidate rows themselves
+    fresh = store.filter_new(candidates, assume_unique=True)
     # also drop candidates already waiting in the deferred frontier
-    fresh = fresh.join(deferred.select("url"), "url", "left_anti").localCheckpoint()
-    n_enqueued = fresh.count()
+    fresh_obs = Observation()
+    fresh = fresh.join(deferred.select("url"), "url", "left_anti").observe(
+        fresh_obs, F.count(F.lit(1)).alias("n")
+    ).localCheckpoint()
+    n_enqueued = fresh_obs.get["n"]
     next_frontier = deferred.select(*FRONTIER_COLS).unionByName(
         fresh.select(*FRONTIER_COLS)
     )
@@ -675,7 +760,6 @@ def run_round(
         .agg(F.count("*").alias("n_scheduled"))
         .withColumn("round", F.lit(round_no))
     )
-    n_scheduled = int(sched_counts.get("scheduled", 0))
     elapsed = time.time() - t0
     from fraudcrawler_spark.session import local_df
 
@@ -686,21 +770,14 @@ def run_round(
                 "round": round_no,
                 "n_frontier": n_frontier,
                 "n_scheduled": n_scheduled,
-                "n_deferred": int(sched_counts.get("deferred", 0)),
-                "n_blocked": int(sched_counts.get("blocked", 0)),
+                "n_deferred": n_deferred,
+                "n_blocked": n_blocked,
                 "n_new": n_new,
                 "n_dup": n_scheduled - n_new,
                 "n_results": n_new,  # one result row per newly-claimed url
                 "n_enqueued": n_enqueued,
-                # cheap: raw_expanded is localCheckpointed; both slices are
-                # metadata-only scans of the materialized partition. Zero
-                # when the corresponding config flag is off.
-                "n_redirected": int(
-                    raw_expanded.where(F.col("_redirected")).count()
-                ) if redirect_map is not None else 0,
-                "n_redirect_loops": int(
-                    loop_dropped.count()
-                ) if redirect_map is not None else 0,
+                "n_redirected": link_counts["n_redirected"],
+                "n_redirect_loops": link_counts["n_redirect_loops"],
                 "n_trap_dropped": int(n_trap_dropped),
                 "elapsed_sec": elapsed,
                 "urls_per_sec": (n_scheduled + n_new) / elapsed if elapsed > 0 else 0.0,
@@ -723,7 +800,7 @@ def run_round(
         lambda: state.write(
             "frontier", round_no + 1, next_frontier,
             sort_cols=["priority", "host", "crawl_depth"],
-            ncoalesce=_nc(n_enqueued + int(sched_counts.get("deferred", 0))),
+            ncoalesce=_nc(n_enqueued + n_deferred),
         ),
     )
     state.commit(round_no)
@@ -787,6 +864,9 @@ def run_crawl(
         state = init_crawl(spark, corpus_dir, state_root, config,
                            tables=tables)
     manifest = state.read_manifest()
+    if not config.prompts and "prompts" in tables:
+        # the prompts dim is static: collect it once per crawl, not per round
+        config = replace(config, prompts=prompts_from_dim(tables["prompts"]))
     if config.resolve_redirects:
         if "redirects" not in tables:
             raise ValueError(

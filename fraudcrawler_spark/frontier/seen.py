@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -46,13 +46,6 @@ SEG_SCHEMA = StructType(
         StructField("n_hashes", IntegerType()),
         StructField("n_items", LongType()),
         StructField("bitmap", BinaryType()),
-    ]
-)
-
-PROBE_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("maybe_seen", BooleanType()),
     ]
 )
 
@@ -93,6 +86,22 @@ class SeenStore:
         self._segments: DataFrame | None = None  # (part, capacity, n_hashes, bitmap)
         self._seen: DataFrame | None = None  # (part, url)
 
+    def _by_segment(self, rows: DataFrame, segments: DataFrame, kernel,
+                    schema: StructType) -> DataFrame:
+        """Full cogroup of ``rows`` with ``segments`` on ``part``, the kernel
+        called once per segment. Both sides are hash-partitioned over an
+        explicit partition count — one task per core, at most one per
+        segment. Left to adaptive execution, the small segment shuffle is
+        coalesced into ONE Python task that runs every segment's kernel
+        call back to back."""
+        n = max(1, min(self.partitions,
+                       self.spark.sparkContext.defaultParallelism))
+        return (
+            rows.repartition(n, "part").groupBy("part")
+            .cogroup(segments.repartition(n, "part").groupBy("part"))
+            .applyInPandas(kernel, schema)
+        )
+
     # -- state I/O ---------------------------------------------------------
     def load(self, segments: DataFrame | None, seen: DataFrame | None) -> None:
         self._segments = segments
@@ -109,56 +118,66 @@ class SeenStore:
     # -- probe -------------------------------------------------------------
     def probe(self, urls: DataFrame, url_col: str = "url",
               assume_unique: bool = False) -> DataFrame:
-        """→ (url, maybe_seen). Bloom-negative ⇒ definitely new.
+        """→ (url, [input columns,] maybe_seen). Filter-negative ⇒
+        definitely new.
 
         assume_unique=True skips the defensive distinct() — callers whose
         input is unique by construction (frontier rows, groupBy-url
         candidates) save a full shuffle of the probe set per call, which
-        at 10^10-url rounds is the single biggest avoidable exchange."""
-        sel = urls.select(F.col(url_col).alias("url"))
-        if not assume_unique:
-            sel = sel.distinct()
+        at 10^10-url rounds is the single biggest avoidable exchange —
+        and carries the input's other columns through, so the caller
+        needs no join back to its rows."""
+        if assume_unique:
+            extra = [c for c in urls.columns if c not in (url_col, "url")]
+            sel = urls.select(F.col(url_col).alias("url"), *extra)
+        else:
+            sel = urls.select(F.col(url_col).alias("url")).distinct()
         cand = with_part_hash(sel, self.partitions)
         if self._segments is None:
-            return cand.select("url").withColumn("maybe_seen", F.lit(False))
+            return sel.withColumn("maybe_seen", F.lit(False))
+        out_schema = StructType(
+            [StructField(f.name, f.dataType, True) for f in sel.schema.fields]
+            + [StructField("maybe_seen", BooleanType())]
+        )
+        out_cols = out_schema.fieldNames()
 
         def _probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             if left.empty:
-                return pd.DataFrame(columns=["url", "maybe_seen"])
+                return pd.DataFrame(columns=out_cols)
+            out = left.drop(columns=["part", "h1"])
             if right.empty:
-                return pd.DataFrame({"url": left["url"], "maybe_seen": False})
-            seg = segments_from_pdf(right)[int(right["part"].iloc[0])]
-            # h1 is the JVM xxhash64 column — membership is pure numpy
-            return pd.DataFrame(
-                {"url": left["url"],
-                 "maybe_seen": seg.contains_hashed(series_u64(left["h1"]))}
-            )
+                out["maybe_seen"] = False
+            else:
+                seg = segments_from_pdf(right)[int(right["part"].iloc[0])]
+                # h1 is the JVM xxhash64 column — membership is pure numpy
+                out["maybe_seen"] = seg.contains_hashed(series_u64(left["h1"]))
+            return out[out_cols]
 
-        return (
-            cand.groupBy("part")
-            .cogroup(self._segments.groupBy("part"))
-            .applyInPandas(_probe, PROBE_SCHEMA)
-        )
+        return self._by_segment(cand, self._segments, _probe, out_schema)
 
     def filter_new(self, urls: DataFrame, url_col: str = "url",
                    assume_unique: bool = False) -> DataFrame:
-        """Exact set of urls NOT in the seen store (Bloom + confirm join).
+        """Exact set of urls NOT in the seen store (filter probe + exact
+        confirm join); with assume_unique, the input rows themselves.
 
-        The probe output feeds TWO consumers (Bloom-negatives passthrough
-        + positives' exact-confirm anti-join). Left as plain branches,
-        each consumer re-executes the whole probe subtree — the cogroup
-        Python pass AND everything upstream of it (in the round DAG
-        that's the link explode + canonicalize + groupBy) run twice. The
-        url-hash repartition below makes both branches read ONE reused
-        shuffle (Spark's exchange reuse), and its HashPartitioning(url)
-        already satisfies the anti-join's left-side distribution, so the
-        confirm join adds no exchange of its own."""
+        The probe output feeds two consumers (the filter-negatives, and
+        the positives' exact confirm), so it is materialized once
+        (localCheckpoint) — left lazy, each consumer re-ran the whole
+        probe subtree: the cogroup Python pass and everything upstream
+        of it. Its positive count is observed on that materialization; a
+        probe with no positive skips the confirm, and its scan of the
+        seen history, entirely."""
         probed = self.probe(urls, url_col, assume_unique=assume_unique)
         if self._seen is None:
-            return probed.select("url")
-        probed = probed.repartition(F.col("url"))
-        negatives = probed.where(~F.col("maybe_seen")).select("url")
-        positives = probed.where(F.col("maybe_seen")).select("url")
+            return probed.drop("maybe_seen")
+        obs = Observation()
+        probed = probed.observe(
+            obs, F.count(F.when(F.col("maybe_seen"), 1)).alias("n")
+        ).localCheckpoint()
+        negatives = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
+        if not obs.get["n"]:
+            return negatives
+        positives = probed.where(F.col("maybe_seen")).drop("maybe_seen")
         confirmed_new = positives.join(
             self._seen.select("url"), "url", "left_anti"
         )
@@ -175,10 +194,17 @@ class SeenStore:
         backend additionally claims them into the segments in a tiny
         second pass so every member owns its own fingerprint copy.
 
-        Input may carry extra BOOLEAN/STRING passthrough columns (e.g.
-        is_blocked); returns the newly-claimed rows (url + passthroughs).
-        Updates ``self._segments`` (caller persists). Halves the shuffle
-        and Python-pass count of the old probe-then-merge round path.
+        Input urls must be unique and may carry extra passthrough
+        columns (e.g. is_blocked, the frontier row). Returns the input
+        rows (url + passthroughs) with a boolean ``claimed``: True for
+        the urls this call claimed, False for those the exact seen table
+        already holds — so a caller needs no join back to its rows to
+        split the two. Updates ``self._segments`` (caller persists).
+        Halves the shuffle and Python-pass count of the old
+        probe-then-merge round path.
+        The filter-positive count is observed on the cogroup's
+        materialization: a round whose probe yields no positive skips the
+        exact confirm — and its scan of the seen history — entirely.
         """
         extra_cols = [c for c in urls.columns if c != url_col]
         inp = with_part_hash(
@@ -242,21 +268,36 @@ class SeenStore:
         seg_df = self._segments
         if seg_df is None:
             seg_df = self.spark.createDataFrame([], SEG_SCHEMA)
+        maybe_obs = Observation()
         fused = (
-            inp.groupBy("part")
-            .cogroup(seg_df.groupBy("part"))
-            .applyInPandas(_fused, out_schema)
+            self._by_segment(inp, seg_df, _fused, out_schema)
+            .observe(maybe_obs,
+                     F.count(F.when(F.col("kind") == "maybe", 1)).alias("n"))
         ).localCheckpoint()
 
         self._segments = fused.where(F.col("kind") == "seg").select(
             "part", "capacity", "n_hashes", "n_items", "bitmap"
         )
         definite_new = fused.where(F.col("kind") == "new").select("url", *extra_cols)
-        maybe = fused.where(F.col("kind") == "maybe").select("url", *extra_cols)
-        if self._seen is not None:
-            confirmed_new = maybe.join(self._seen.select("url"), "url", "left_anti")
-        else:
-            confirmed_new = maybe
+        new_all = definite_new
+        confirmed_new = dups = None
+        if maybe_obs.get["n"]:
+            maybe = fused.where(F.col("kind") == "maybe").select("url", *extra_cols)
+            unseen = maybe
+            if self._seen is not None:
+                seen_urls = self._seen.select("url")
+                unseen = maybe.join(seen_urls, "url", "left_anti")
+                dups = maybe.join(seen_urls, "url", "left_semi")
+            # materialized once: the confirm scans the seen history, and
+            # the claimed rows feed several consumers downstream
+            fp_obs = Observation()
+            confirmed_new = unseen.observe(
+                fp_obs, F.count(F.lit(1)).alias("n")
+            ).localCheckpoint()
+            if fp_obs.get["n"]:
+                new_all = definite_new.unionByName(confirmed_new)
+            else:
+                confirmed_new = None
 
         if self.filter_kind == "cuckoo":
             # Deletion-capable filters must hold one fingerprint copy PER
@@ -266,23 +307,23 @@ class SeenStore:
             # url filter-negative (false negative → duplicate claim). The
             # FP set is tiny, so the extra add() pass stays cheap and only
             # this backend pays it.
-            confirmed_new = confirmed_new.localCheckpoint()
-            if confirmed_new.count() > 0:
+            if confirmed_new is not None:
                 self.add(confirmed_new.select("url"))  # segments + seen
-            new_all = definite_new.unionByName(confirmed_new)
             add_seen = with_part(definite_new.select("url"), self.partitions)
         else:
             # Bloom false positives already answer contains() True, so
             # merging them into the bitmap would set already-set bits — a
             # no-op. Only the exact seen table needs them: append new_all
             # (definite new + confirmed FPs) in one pass, no second
-            # cogroup and no extra count job per round.
-            new_all = definite_new.unionByName(confirmed_new)
+            # cogroup.
             add_seen = with_part(new_all.select("url"), self.partitions)
         self._seen = (
             add_seen if self._seen is None else self._seen.unionByName(add_seen)
         )
-        return new_all
+        rows = new_all.withColumn("claimed", F.lit(True))
+        if dups is not None:
+            rows = rows.unionByName(dups.withColumn("claimed", F.lit(False)))
+        return rows
 
     # -- retire (recrawl/TTL) ------------------------------------------------
     def retire(self, urls: DataFrame, url_col: str = "url") -> None:
@@ -306,9 +347,10 @@ class SeenStore:
             )
         if self._segments is None:
             return
-        ret = with_part_hash(
-            urls.select(F.col(url_col).alias("url")).distinct(), self.partitions
-        )
+        # not distinct() here: a url's rows all route to its segment, so
+        # the kernel drops repeats itself, with no shuffle of its own
+        ret = with_part_hash(urls.select(F.col(url_col).alias("url")),
+                             self.partitions)
 
         def _del(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             if right.empty:
@@ -318,7 +360,10 @@ class SeenStore:
             seg = segments_from_pdf(right)[part]
             n_items = int(right["n_items"].iloc[0]) if "n_items" in right else 0
             if not left.empty:
-                deleted = seg.delete_hashed(series_u64(left["h1"]))
+                # one delete per url: a repeat would remove a colliding
+                # member's fingerprint copy
+                h1 = left.drop_duplicates("url")["h1"]
+                deleted = seg.delete_hashed(series_u64(h1))
                 n_items = max(0, n_items - int(deleted.sum()))
             return pd.DataFrame(
                 {
@@ -330,11 +375,7 @@ class SeenStore:
                 }
             )
 
-        self._segments = (
-            ret.groupBy("part")
-            .cogroup(self._segments.groupBy("part"))
-            .applyInPandas(_del, SEG_SCHEMA)
-        )
+        self._segments = self._by_segment(ret, self._segments, _del, SEG_SCHEMA)
         if self._seen is not None:
             self._seen = self._seen.join(ret.select("url"), "url", "left_anti")
 
@@ -379,11 +420,7 @@ class SeenStore:
         # cogroup is a FULL cogroup: partitions with no new urls still
         # appear (left empty, right = segment) and pass through unchanged,
         # so no separate "untouched" pass is needed
-        self._segments = (
-            new.groupBy("part")
-            .cogroup(seg_df.groupBy("part"))
-            .applyInPandas(_merge, SEG_SCHEMA)
-        )
+        self._segments = self._by_segment(new, seg_df, _merge, SEG_SCHEMA)
 
         add_seen = new.select("part", "url")
         self._seen = (

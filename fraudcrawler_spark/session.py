@@ -32,6 +32,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # PySpark's DataFrame debugging wraps every Column/DataFrame call
+        # in ~4 extra py4j round trips (it records the Python call site
+        # for error messages): over half of a crawl round's ~6k driver
+        # round trips. Off by default; extra_conf can turn it back on.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

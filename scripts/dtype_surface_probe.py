@@ -85,6 +85,11 @@ def main() -> int:
     sf_dir = os.environ.get("SF_DIR", "/root/testdata/sf0.001")
     args = sys.argv[1:]
     exact = args[1:] if args[:1] == ["--exact"] else None
+    if exact == []:
+        # nothing to check is not a clean result
+        print("usage: dtype_surface_probe.py [--sweep | --exact NAME ...]: "
+              "--exact needs at least one entry name", file=sys.stderr)
+        return 2
 
     spark = get_spark("dtype_probe", cores=8,
                       extra_conf={"spark.ui.showConsoleProgress": "false"})

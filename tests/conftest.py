@@ -8,6 +8,9 @@ from fraudcrawler_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
+    # session.py's default heap (48g) lets the test JVM grow until a
+    # machine with less memory kills it mid-suite; the suite needs far less
+    os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
     s = get_spark(app_name="fc_tests", cores=4, shuffle_partitions=8)
     yield s
 

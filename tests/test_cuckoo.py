@@ -95,13 +95,34 @@ def test_cuckoo_fp_claim_owns_fingerprint_copy(spark):
     claimed = store.probe_and_claim(
         spark.createDataFrame(pd.DataFrame({"url": [url]}))
     )
-    assert claimed.count() == 1  # exact confirm says new → claimed
+    # exact confirm says new → claimed
+    assert claimed.where("claimed").count() == 1
     seg = segments_from_pdf(store.segments.toPandas())[
         zlib.crc32(url.encode()) % 2
     ]
     # two copies now (seed + claim): deleting one keeps membership
     assert seg.delete_many([url]).all()
     assert seg.contains_many([url]).all()
+
+
+def test_retire_deletes_each_url_once(spark):
+    """A url repeated in one retire() call loses ONE fingerprint copy: a
+    second delete would remove the copy some colliding member owns."""
+    import zlib
+
+    store = SeenStore(spark, partitions=2, capacity_per_part=128,
+                      filter_kind="cuckoo")
+    url = "https://s.ch/twice"
+    one = spark.createDataFrame(pd.DataFrame({"url": [url]}))
+    store.add(one)
+    store.add(one)  # two copies
+    store.retire(spark.createDataFrame(pd.DataFrame({"url": [url, url]})))
+    seg = segments_from_pdf(store.segments.toPandas())[
+        zlib.crc32(url.encode()) % 2
+    ]
+    assert seg.contains_many([url]).all()
+    assert seg.delete_many([url]).all()
+    assert not seg.contains_many([url]).any()
 
 
 def test_crawl_cuckoo_matches_bloom(spark, corpus_dir, tmp_path_factory):
